@@ -329,11 +329,9 @@ def main() -> None:
         # trainer gets ONE cold run with a cleared vocab memo (see
         # TRAINER_SINGLE_RUN).
         if name in TRAINER_SINGLE_RUN:
-            from data_engineering_spark.operators.classify import _WEIGHTS_MEMO
-            from data_engineering_spark.operators.text import _BPE_VOCAB_MEMO
+            from data_engineering_spark.operators import memo
 
-            _BPE_VOCAB_MEMO.clear()
-            _WEIGHTS_MEMO.clear()
+            memo.clear()
             n_runs = 1
         else:
             n_runs = 3 if name in BIMODAL else 2

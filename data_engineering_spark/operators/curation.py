@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import memo as plan_memo
 from .dedup import shingle_hashes, shingles
 from .text import tokens
 
@@ -360,17 +361,11 @@ def dsir_weights(
     # scan), and the memo registry dedupes the stream between the two
     # consumers exactly like the minhash/ngram shared preps.
     from .dedup import _spread
-    from .similarity import _memoized_persist
 
     raw = _hashed_ngram_stream(_spread(corpus), text_col, id_col, buckets)
-    if cache:
-        feats = _memoized_persist(
-            corpus, ("dsir_feats", text_col, id_col, buckets), raw
-        )
-    else:
-        from pyspark import StorageLevel
-
-        feats = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    feats = plan_memo.persisted(
+        corpus, ("dsir_feats", text_col, id_col, buckets), raw, cache
+    )
     q = feats.groupBy("b").agg(F.count(F.lit(1)).alias("qc"))
     w = Window.partitionBy()
     # ONE pass over the target stream, ZERO eager side effects: the two
@@ -1008,18 +1003,10 @@ def boilerplate_strip(
     # well-split scan) and the memo registry dedupes the fan-out
     # between the two consumers.
     from .dedup import _spread
-    from .similarity import _memoized_persist
 
     raw = chunk_sliding(_spread(df), window=block, stride=block,
                         text_col=text_col, id_col=id_col)
-    if cache:
-        chunks = _memoized_persist(
-            df, ("bp_chunks", text_col, id_col, block), raw
-        )
-    else:
-        from pyspark import StorageLevel
-
-        chunks = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    chunks = plan_memo.persisted(df, ("bp_chunks", text_col, id_col, block), raw, cache)
     dfreq = (
         chunks.select(id_col, "chunk_text")
         .distinct()

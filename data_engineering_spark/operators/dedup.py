@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import memo as plan_memo
 from .text import fingerprint, tokens
 
 # Below this many total input bytes, a runtime broadcast of any verify-join
@@ -449,15 +450,6 @@ def minhash_near_dedup(
       mid-session (the ``lattice_unit_prep`` rewrite-in-place caveat,
       r13 advice).
     """
-    from .similarity import _memoized_persist as _memo_registry
-
-    def _memoized_persist(src, params, out):
-        if cache:
-            return _memo_registry(src, params, out)
-        from pyspark import StorageLevel
-
-        return out.persist(StorageLevel.MEMORY_AND_DISK)
-
     small_corpus: bool | None = None  # resolved lazily, probed at most once
 
     def _is_small() -> bool:
@@ -496,8 +488,11 @@ def minhash_near_dedup(
         # default budget (r15 interleaved A/B: 1.48 vs 1.86 s)
         _SPREAD_DENSE_BYTES if signature_impl == "portable" else None,
     ).select(F.col(id_col), shingle_fp(text_col, n).alias("shset"))
-    sh = _memoized_persist(
-        sh_plan, ("minhash_sh", id_col, text_col, n, signature_impl == "portable"), sh_plan
+    sh = plan_memo.persisted(
+        sh_plan,
+        ("minhash_sh", id_col, text_col, n, signature_impl == "portable"),
+        sh_plan,
+        cache,
     )
     buckets = minhash_band_buckets(
         sh, id_col=id_col, num_hashes=num_hashes, bands=bands,
@@ -525,10 +520,11 @@ def minhash_near_dedup(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    cand = _memoized_persist(
+    cand = plan_memo.persisted(
         cand_plan,
         ("minhash_cand", id_col, num_hashes, bands, n, signature_impl, max_bucket),
         cand_plan,
+        cache,
     )
     return jaccard_verify_pairs(
         cand, sh, id_col=id_col, threshold=threshold, hint_verify=hint_verify
@@ -840,16 +836,9 @@ def simhash_near_dedup(
         # otherwise — the r11/r12 shared-prep policy). ``cache=False``
         # takes a per-call persist instead — the rewrite-in-place
         # caller's opt-out (r13 advice; see minhash_near_dedup).
-        if cache:
-            from .similarity import _memoized_persist
-
-            sig = _memoized_persist(
-                sig, ("simhash_sig", id_col, text_col, signature_impl), sig
-            )
-        else:
-            from pyspark import StorageLevel
-
-            sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+        sig = plan_memo.persisted(
+            sig, ("simhash_sig", id_col, text_col, signature_impl), sig, cache
+        )
     bands = sig.select(
         id_col,
         "simhash",
@@ -987,10 +976,8 @@ def ngram_jaccard_pairs(
     # per-invocation persist pins one session-lifetime cache copy per
     # CALL (the accumulation class the r11 advice flagged); the shared
     # registry caps live copies and evicts oldest-first.
-    from .similarity import _memoized_persist
-
     raw = _spread(df).select(F.col(id_col), gram.alias("shset"))
-    sh = _memoized_persist(raw, ("ngram_sh", id_col, text_col, n, gram_impl), raw)
+    sh = plan_memo.persisted(raw, ("ngram_sh", id_col, text_col, n, gram_impl), raw)
     tok = sh.select(F.col(id_col), F.explode("shset").alias("blk"))
     freq = tok.groupBy("blk").agg(F.count(F.lit(1)).alias("doc_freq"))
     ranked = (
@@ -1090,10 +1077,8 @@ def verbatim_spans(
     # starts feeds the gram-df aggregate AND the shared-gram join —
     # without a persist the positional-gram explode runs twice (r11
     # review).
-    from .similarity import _memoized_persist
-
     raw = positional_grams(df, text_col, id_col, gram, gram_impl)
-    starts = _memoized_persist(
+    starts = plan_memo.persisted(
         raw, ("verbatim_starts", id_col, text_col, gram, gram_impl), raw
     )
     gdf = (

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf, udtf
 
+from . import memo as plan_memo
 from .text import tokens
 
 __all__ = [
@@ -165,10 +166,8 @@ def tfidf_keywords(df: DataFrame, id_col: str, text_col: str, top_k: int = 3) ->
     # through the bounded memo registry (r12 review): a raw persist here
     # pinned one session-lifetime cache copy per invocation, the same
     # accumulation class the r11 advice flagged in the dedup relations.
-    from .similarity import _memoized_persist
-
     raw_tf = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
-    tf = _memoized_persist(raw_tf, ("tfidf_tf", id_col, text_col), raw_tf)
+    tf = plan_memo.persisted(raw_tf, ("tfidf_tf", id_col, text_col), raw_tf)
     # Corpus size rides along as a broadcast 1-row aggregate instead of a
     # driver-side df.count(): one plan, one job, no extra action.
     n_docs = F.broadcast(df.agg(F.count(F.lit(1)).alias("n_docs")))

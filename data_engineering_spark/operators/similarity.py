@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import memo as plan_memo
+
 __all__ = [
     "as_double",
     "dot",
@@ -70,104 +72,6 @@ LATTICE_SCALE = 1_000_000
 # Cauchy-Schwarz, so d²·1e12 < 1e13·1e13·1e12 = 1e38). Structural — a
 # breach means the input was not normalized, and the admit guard raises.
 _LATTICE_NN_CAP = 10**13
-
-# Memoized cache registry for lattice_unit_prep(cache=True): one
-# persisted prep PER DISTINCT (input plan, params), looked up by
-# semanticHash and verified with sameSemantics before reuse (r10
-# advice's memoization option). Each lattice/classifier query
-# re-invocation used to add another session-lifetime MEMORY_AND_DISK
-# copy — across a 50-query sweep over the same parquet that
-# accumulates; with memoization the sweep's repeated invocations share
-# ONE prep per corpus. Eviction (beyond the cap, oldest first) is
-# reserved for genuinely distinct inputs piling up: NOT merely a
-# recompute — unpersisting a prep that an un-executed plan still
-# references dissolves the materialization boundary and re-inlines the
-# interpreted quantize/fold tree into per-PAIR expressions (the 4.5×
-# trap tests/test_plans.py ceilings; a plain FIFO tripped it the first
-# session it ran, three preps deep). Cap 4 distinct corpora in flight
-# keeps that path effectively unreachable in any real sweep.
-# Reuse caveat (same class as Spark's own CacheManager, which already
-# dedupes persists by canonicalized plan): re-reading a path whose
-# files changed mid-session reuses the stale prep — rewrite-in-place
-# corpora should pass cache=False.
-# Cap 24 (was 16/8/4): the registry now serves ELEVEN operator
-# families — lattice preps, ngram_sh, verbatim_starts, tfidf_tf (the
-# r12 persist-routing consolidations), minhash_sh, minhash_cand,
-# simhash_sig, tpch_q15_revenue (the r13 sweep that retired the last
-# raw persists; one minhash_near_dedup call alone occupies 2 slots),
-# plus cls_feats, dsir_feats, bp_chunks (the r14 shared-prep additions;
-# r14 ADVICE flagged the inventory drift) — and the cap must stay ≥
-# the worst-case LIVE slot count or a composite sweep that builds every
-# prep before executing would LRU-unpersist a prep an un-executed
-# returned plan still references, re-inlining the interpreted
-# quantize/shingle tree per pair (the documented 4.5× unpersist trap
-# below). Worst case: 11 families, two of which can hold 2 live slots
-# each (minhash sh+cand; lattice preps keyed per vec column) ≈ 13-15 —
-# 24 keeps the safety margin the r13 resize had. Slots are
-# ≤corpus-projection size, so session growth stays bounded.
-_PREP_CACHE_CAP = 24
-_PREP_CACHE: list[tuple[int | None, DataFrame, tuple, DataFrame]] = []
-# One lock for every registry mutation: concurrent lattice consumers
-# (overlapping streaming foreachBatch threads both call
-# lattice_unit_prep(cache=True)) used to race the unguarded
-# len-check/pop(0) eviction — a pop between another thread's check and
-# pop raises IndexError and fails the QUERY, not just the memo (r11
-# advice). The lock covers lookup+LRU-refresh and insert+evict; the
-# JVM-side persist/unpersist calls inside stay cheap (they register,
-# not materialize).
-_PREP_CACHE_LOCK = __import__("threading").Lock()
-
-
-def _memoized_persist(src: DataFrame, params: tuple, out: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    try:
-        h = src.semanticHash()
-    except Exception:  # noqa: BLE001 — hashing is an optimization, never a gate
-        h = None
-    if h is not None:
-        with _PREP_CACHE_LOCK:
-            for entry in list(_PREP_CACHE):
-                eh, esrc, eparams, eprep = entry
-                if eh == h and eparams == params:
-                    try:
-                        if not esrc.sameSemantics(src):
-                            continue
-                        # liveness check: a session-level clearCache() (the
-                        # bench does one between queries; so does the driver
-                        # harness) uncaches the relation UNDERNEATH the
-                        # registry — handing out a stale entry would quietly
-                        # re-inline the quantize tree per pair (the 4.5×
-                        # trap; caught as an order-dependent plan-test red).
-                        # Stale entries are dropped and rebuilt fresh.
-                        if eprep.storageLevel == StorageLevel.NONE:
-                            _PREP_CACHE.remove(entry)
-                            continue
-                        # LRU refresh: a hit is as fresh as a build
-                        _PREP_CACHE.remove(entry)
-                        _PREP_CACHE.append(entry)
-                        return eprep
-                    except Exception:  # noqa: BLE001
-                        pass
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    if h is None:
-        # unhashable source: the entry could never be matched, so
-        # registering it would only burn a cache slot and prematurely
-        # evict a live shared prep (end-of-round review). Persist
-        # unregistered — the pre-memoization per-invocation behavior.
-        return out
-    evicted: list[DataFrame] = []
-    with _PREP_CACHE_LOCK:
-        _PREP_CACHE.append((h, src, params, out))
-        while len(_PREP_CACHE) > _PREP_CACHE_CAP:
-            evicted.append(_PREP_CACHE.pop(0)[3])
-    for prep in evicted:
-        try:
-            prep.unpersist()
-        except Exception:  # noqa: BLE001 — a dead session must not poison the next query
-            pass
-    return out
-
 
 def as_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -337,7 +241,7 @@ def lattice_unit_prep(
     attributes — nothing left to inline), and the quantization runs
     once per VECTOR, period. MEMORY_AND_DISK, ~(dim·8B + 16B) per row —
     the same persisted-signature-relation trade the MinHash path uses —
-    MEMOIZED per (input plan, params) in ``_PREP_CACHE``, so repeated
+    MEMOIZED per (input plan, params) by ``memo.persisted``, so repeated
     lattice-query invocations in one session share one prep per corpus
     instead of accumulating MEMORY_AND_DISK copies for the session
     lifetime (r10 advice). ``tests/test_plans.py`` pins the
@@ -374,7 +278,7 @@ def lattice_unit_prep(
     )
     out = q.withColumn("nn", checked)
     if cache:
-        out = _memoized_persist(df, (id_col, vec_col, out_id, scale), out)
+        out = plan_memo.persisted(df, (id_col, vec_col, out_id, scale), out)
     return out
 
 

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import memo as plan_memo
+
 __all__ = [
     "tokens",
     "token_count_regex",
@@ -831,22 +833,6 @@ def chained_replace_kernel(pairs: list[tuple[str, str]]):
     return apply_chain
 
 
-# Session-bounded memo for trained BPE vocabularies: the learned merge
-# table is a DRIVER-LOCAL list (≤ vocab rows — 1024 tuples for the
-# 16×64 production shape), so caching the rows themselves is exact and
-# storage-trivial. Keyed like the lattice prep registry (semanticHash +
-# sameSemantics + params), lock-guarded, capped. Motivation (r11
-# verdict #2): nlp_bpe_vocab_16x64 and nlp_bpe_apply_16x64 each trained
-# the SAME 1024-merge vocab — 56 s + 50 s of a 329 s bench re-deriving
-# identical merges; with the memo the second caller replays the rows.
-# Same reuse caveat as every plan-keyed cache: a corpus rewritten in
-# place mid-session would replay a stale vocab — such callers keep the
-# default memo=False.
-_BPE_VOCAB_MEMO_CAP = 4
-_BPE_VOCAB_MEMO: list[tuple[int, "DataFrame", tuple, list]] = []
-_BPE_VOCAB_MEMO_LOCK = __import__("threading").Lock()
-
-
 def phrase_merge_rounds_batched(
     df: DataFrame,
     passes: int = 2,
@@ -875,37 +861,35 @@ def phrase_merge_rounds_batched(
     right_tok, merged, pair_count) — pair_count is the count-pass frequency the
     rank was chosen on, i.e. the pre-batch count.
 
-    ``memo=True`` returns the session-cached merge rows when the same
+    ``memo=True`` replays the session-memoized merge rows when the same
     (input plan, passes, merges_per_pass, text_col) was already trained
-    this session — see ``_BPE_VOCAB_MEMO``."""
+    this session (``memo.value`` kind ``bpe_vocab``). The merge table is
+    a driver-local list (1024 tuples for the 16×64 production shape), so
+    replaying it is exact: ``nlp_bpe_vocab_16x64`` and
+    ``nlp_bpe_apply_16x64`` train the SAME vocab, and the second caller
+    used to spend ~50 s re-deriving identical merges. A corpus rewritten
+    in place mid-session would replay a stale vocab — such callers keep
+    the default ``memo=False``."""
+    rows = plan_memo.value(
+        "bpe_vocab",
+        df,
+        (passes, merges_per_pass, text_col),
+        lambda: _bpe_batched_merges(df, passes, merges_per_pass, text_col),
+        memo,
+    )
+    return df.sparkSession.createDataFrame(
+        rows,
+        "pass_no int, merge_rank int, left_tok string, right_tok string, "
+        "merged string, pair_count long",
+    )
+
+
+def _bpe_batched_merges(
+    df: DataFrame, passes: int, merges_per_pass: int, text_col: str
+) -> list[tuple]:
+    """The merge rows :func:`phrase_merge_rounds_batched` emits."""
     from pyspark import StorageLevel
 
-    spark = df.sparkSession
-    schema = (
-        "pass_no int, merge_rank int, left_tok string, right_tok string, "
-        "merged string, pair_count long"
-    )
-    params = (passes, merges_per_pass, text_col)
-    h = None
-    if memo:
-        try:
-            h = df.semanticHash()
-        except Exception:  # noqa: BLE001 — memo is an optimization, never a gate
-            h = None
-        if h is not None:
-            with _BPE_VOCAB_MEMO_LOCK:
-                for entry in list(_BPE_VOCAB_MEMO):
-                    eh, esrc, eparams, erows = entry
-                    if eh == h and eparams == params:
-                        try:
-                            if not esrc.sameSemantics(df):
-                                continue
-                        except Exception:  # noqa: BLE001
-                            continue
-                        # LRU refresh
-                        _BPE_VOCAB_MEMO.remove(entry)
-                        _BPE_VOCAB_MEMO.append(entry)
-                        return spark.createDataFrame(erows, schema)
     # deliberately NOT _spread — same small-per-pass-job rationale as
     # phrase_merge_rounds (measured 2.6× slower with the fan-out, r14)
     segdf = df.select(_bpe_seg0(text_col).alias("seg")).persist(
@@ -937,9 +921,4 @@ def phrase_merge_rounds_batched(
     segdf.unpersist()
     if prev is not None:
         prev.unpersist()
-    if memo and h is not None:
-        with _BPE_VOCAB_MEMO_LOCK:
-            _BPE_VOCAB_MEMO.append((h, df, params, out))
-            while len(_BPE_VOCAB_MEMO) > _BPE_VOCAB_MEMO_CAP:
-                _BPE_VOCAB_MEMO.pop(0)
-    return spark.createDataFrame(out, schema)
+    return out

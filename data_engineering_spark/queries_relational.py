@@ -23,6 +23,7 @@ from .functions.scalar import (
     scrub_to_null,
     to_char_yyyymmdd,
 )
+from .operators import memo as plan_memo
 from .operators.aggregations import assemble_vector, distinct_sorted, grouped_pivot, last_wins_merge
 from .operators.joins import (
     BROADCAST_GATE_BYTES,
@@ -1430,8 +1431,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     a raw per-call persist here is never released (the returned frame
     depends on it), so repeated q15 runs in one session would pile up
     dead cache entries."""
-    from data_engineering_spark.operators.similarity import _memoized_persist
-
     l = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -1441,7 +1440,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_revenue"
         )
     )
-    revenue = _memoized_persist(revenue_plan, ("tpch_q15_revenue",), revenue_plan)
+    revenue = plan_memo.persisted(revenue_plan, ("tpch_q15_revenue",), revenue_plan)
     max_rev = revenue.agg(F.max("total_revenue").alias("m"))
     s = _t(spark, sf_dir, "supplier")
     return (

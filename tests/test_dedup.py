@@ -463,26 +463,24 @@ def test_lattice_prep_cache_is_memoized_and_bounded(spark):
     prep (r10 advice: each re-invocation used to add another
     session-lifetime MEMORY_AND_DISK copy), and only genuinely distinct
     inputs beyond the cap evict (oldest first)."""
+    from data_engineering_spark.operators import memo
     from data_engineering_spark.operators import similarity as sim
 
+    relations = memo._REGISTRY[memo.RELATIONS]
+    cap = memo._CAPS[memo.RELATIONS]
     # drain entries left by earlier tests: at-cap growth is zero-sum
     # (each add evicts), which would make the +1 assertion below vacuous
-    for entry in list(sim._PREP_CACHE):
-        try:
-            entry[3].unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-    sim._PREP_CACHE.clear()
+    memo.clear()
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], ["vec_id", "embedding"]
     )
     # same input + params → the same object, no new cache entry
-    before = len(sim._PREP_CACHE)
+    before = len(relations)
     p1 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
     p2 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
     assert p2 is p1
-    assert len(sim._PREP_CACHE) == before + 1
+    assert len(relations) == before + 1
     # different params on the same input do NOT share
     p3 = sim.lattice_unit_prep(
         df, "vec_id", "embedding", "vec_id", scale=1000, cache=True
@@ -494,9 +492,9 @@ def test_lattice_prep_cache_is_memoized_and_bounded(spark):
             df.filter(F.col("vec_id") >= -i), "vec_id", "embedding", "vec_id",
             cache=True,
         )
-        for i in range(1, sim._PREP_CACHE_CAP + 2)
+        for i in range(1, cap + 2)
     ]
-    assert len(sim._PREP_CACHE) <= sim._PREP_CACHE_CAP
+    assert len(relations) <= cap
     assert preps[-1].storageLevel.useMemory
     assert not p1.storageLevel.useMemory  # the oldest entry was evicted
     # an evicted prep still computes correctly (recompute, never wrong)
@@ -585,42 +583,57 @@ def test_cosine_topk_pandas_agrees_with_exact(spark, sf_dir):
     assert exact == fast
 
 
-def test_canonical_assignment_chain(spark):
+def _canonical_gates(monkeypatch):
+    """Yield once per canonical_assignment path, with the edge-count gate
+    set for it: the default gate (these small graphs resolve on the
+    driver) and 0 (every graph with an edge takes the distributed
+    propagation loop)."""
+    from data_engineering_spark.operators import dedup
+
+    for gate in (dedup._CANONICAL_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "_CANONICAL_DRIVER_MAX_EDGES", gate)
+        yield gate
+
+
+def test_canonical_assignment_chain(spark, monkeypatch):
     """A duplicate chain 1-2, 2-3, plus pair 10-11: labels converge to the
-    cluster min even though (1,3) was never a pair."""
+    cluster min even though (1,3) was never a pair — on both paths."""
     from data_engineering_spark.operators.dedup import canonical_assignment
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"])
     ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 50]], ["doc_id"])
-    out = {r.doc_id: (r.canonical_id, r.is_dup) for r in canonical_assignment(pairs, ids).collect()}
-    assert out[1] == (1, False)
-    assert out[2] == (1, True)
-    assert out[3] == (1, True)  # transitive through 2
-    assert out[10] == (10, False)
-    assert out[11] == (10, True)
-    assert out[50] == (50, False)  # untouched singleton
+    for gate in _canonical_gates(monkeypatch):
+        out = {
+            r.doc_id: (r.canonical_id, r.is_dup)
+            for r in canonical_assignment(pairs, ids).collect()
+        }
+        assert out[1] == (1, False), gate
+        assert out[2] == (1, True), gate
+        assert out[3] == (1, True), gate  # transitive through 2
+        assert out[10] == (10, False), gate
+        assert out[11] == (10, True), gate
+        assert out[50] == (50, False), gate  # untouched singleton
 
 
-def test_canonical_assignment_raises_on_truncation(spark):
+def test_canonical_assignment_raises_on_truncation(spark, monkeypatch):
     """A chain deeper than max_rounds must raise, never silently emit
     non-canonical labels (r11 review: a drop-list keyed on truncated
     labels points survivors at documents that are themselves dropped).
     The same chain converges — and certifies via the extra quiet
-    round — once max_rounds covers its diameter."""
-    import pytest as _pytest
-
+    round — once max_rounds covers its diameter. Both paths."""
     from data_engineering_spark.operators.dedup import canonical_assignment
 
     chain = [(i, i + 1) for i in range(1, 9)]  # diameter-8 path 1..9
     pairs = spark.createDataFrame(chain, ["id_a", "id_b"])
     ids = spark.createDataFrame([(i,) for i in range(1, 10)], ["doc_id"])
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        canonical_assignment(pairs, ids, max_rounds=2)
-    out = {
-        r.doc_id: r.canonical_id
-        for r in canonical_assignment(pairs, ids, max_rounds=10).collect()
-    }
-    assert all(v == 1 for v in out.values())
+    for gate in _canonical_gates(monkeypatch):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            canonical_assignment(pairs, ids, max_rounds=2)
+        out = {
+            r.doc_id: r.canonical_id
+            for r in canonical_assignment(pairs, ids, max_rounds=10).collect()
+        }
+        assert all(v == 1 for v in out.values()), gate
 
 
 def test_lsh_multiprobe_recall_superset(spark, sf_dir):
@@ -777,22 +790,28 @@ def test_ivf_refined_finds_planted_neighbor(spark):
     assert 999 in {r.neighbor_id for r in out.collect()}
 
 
-def test_canonical_assignment_reliable_checkpoint(spark, tmp_path):
+def test_canonical_assignment_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """reliable_checkpoints=True runs the propagation through cluster
-    checkpoint() storage (fault-tolerant mode) with identical results."""
+    checkpoint() storage (fault-tolerant mode) with identical results;
+    the distributed loop really writes its rounds under the checkpoint
+    dir."""
     from data_engineering_spark.operators.dedup import canonical_assignment
 
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     ids = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
     # chain 1-2-3 and pair 5-6: transitive closure must label 3 → 1
     pairs = spark.createDataFrame(
         [(1, 2, 0.9), (2, 3, 0.9), (5, 6, 0.9)], ["id_a", "id_b", "sim"]
     )
-    out = {
-        r.doc_id: r.canonical_id
-        for r in canonical_assignment(pairs, ids, reliable_checkpoints=True).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
+    for gate in _canonical_gates(monkeypatch):
+        ckpt = tmp_path / f"ckpt_{gate}"
+        spark.sparkContext.setCheckpointDir(str(ckpt))
+        out = {
+            r.doc_id: r.canonical_id
+            for r in canonical_assignment(pairs, ids, reliable_checkpoints=True).collect()
+        }
+        assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}, gate
+        if gate == 0:
+            assert any(p.is_file() for p in ckpt.rglob("*")), "no checkpoint written"
 
 
 def test_pq_topk_finds_planted_neighbor(spark):
@@ -850,9 +869,10 @@ def test_pq_recall_beats_chance(spark, sf_dir):
     assert len(exact & approx) / len(exact) >= 0.3
 
 
-def test_canonical_assignment_matches_union_find(spark):
+def test_canonical_assignment_matches_union_find(spark, monkeypatch):
     """Randomized graphs: label propagation's fixpoint must equal the
-    union-find (true connected components) min-id labeling."""
+    union-find (true connected components) min-id labeling, on both
+    paths."""
     import random
 
     for seed in (7, 23, 99):
@@ -879,11 +899,12 @@ def test_canonical_assignment_matches_union_find(spark):
         ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
         from data_engineering_spark.operators.dedup import canonical_assignment
 
-        got = {
-            r.doc_id: r.canonical_id
-            for r in canonical_assignment(pairs, ids, max_rounds=60).collect()
-        }
-        assert got == expected, f"seed {seed}"
+        for gate in _canonical_gates(monkeypatch):
+            got = {
+                r.doc_id: r.canonical_id
+                for r in canonical_assignment(pairs, ids, max_rounds=60).collect()
+            }
+            assert got == expected, f"seed {seed}, gate {gate}"
 
 
 def test_minhash_arrow_signature_agrees_with_expr(spark, sf_dir):
@@ -1244,29 +1265,52 @@ def test_lsh_buckets_pandas_null_and_ragged_rows_drop_cleanly(spark):
 
 
 def test_near_dedup_cache_optout_bypasses_registry(spark, planted):
-    """minhash/simhash_near_dedup(cache=False) must not register their
-    shared-prep persists in the session memo registry (the r13 advice's
-    rewrite-in-place caller: a same-plan re-run over rewritten files
-    must re-read fresh), while producing the same pairs as the default
-    cached path."""
-    from data_engineering_spark.operators import similarity as sim
+    """Every shared-prep consumer's cache=False hatch must not register
+    in the session memo registry (the r13 advice's rewrite-in-place
+    caller: a same-plan re-run over rewritten files must re-read fresh),
+    while producing the same rows as the default cached path: minhash,
+    simhash, the dsir feature stream, the boilerplate block fan-out,
+    the perceptron features (training and scoring) and the lattice
+    prep."""
+    from data_engineering_spark.operators import memo
+    from data_engineering_spark.operators.classify import (
+        classifier_margins,
+        train_perceptron,
+    )
+    from data_engineering_spark.operators.curation import boilerplate_strip, dsir_weights
+    from data_engineering_spark.operators.similarity import lattice_unit_prep
 
-    want_mh = {
-        (r.id_a, r.id_b) for r in minhash_near_dedup(planted, threshold=0.5).collect()
+    label = F.when(F.col("doc_id") <= 3, 1).otherwise(-1)
+    target = planted.filter(F.col("doc_id") <= 2)
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])], ["vec_id", "embedding"]
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def perceptron(cache):
+        w, errors = train_perceptron(planted, label, buckets=16, cache=cache)
+        return w, errors, rows(classifier_margins(planted, w, buckets=16, cache=cache))
+
+    cases = {
+        "minhash": lambda cache: rows(
+            minhash_near_dedup(planted, threshold=0.5, cache=cache)
+        ),
+        "simhash": lambda cache: rows(simhash_near_dedup(planted, cache=cache)),
+        "dsir": lambda cache: rows(dsir_weights(planted, target, buckets=64, cache=cache)),
+        "boilerplate": lambda cache: rows(
+            boilerplate_strip(planted, block=2, min_df=2, cache=cache)
+        ),
+        "perceptron": perceptron,
+        "lattice": lambda cache: rows(
+            lattice_unit_prep(vecs, "vec_id", "embedding", "vec_id", cache=cache)
+        ),
     }
-    want_sh = {
-        (r.id_a, r.id_b) for r in simhash_near_dedup(planted).collect()
-    }
-    before = [id(e[3]) for e in sim._PREP_CACHE]
-    got_mh = {
-        (r.id_a, r.id_b)
-        for r in minhash_near_dedup(planted, threshold=0.5, cache=False).collect()
-    }
-    got_sh = {
-        (r.id_a, r.id_b)
-        for r in simhash_near_dedup(planted, cache=False).collect()
-    }
-    assert got_mh == want_mh
-    assert got_sh == want_sh
-    # no new registry entries from the cache=False calls
-    assert [id(e[3]) for e in sim._PREP_CACHE] == before
+    relations = memo._REGISTRY[memo.RELATIONS]
+    for name, run in cases.items():
+        want = run(True)
+        before = [id(e[3]) for e in relations]
+        assert run(False) == want, name
+        # no new registry entries from the cache=False call
+        assert [id(e[3]) for e in relations] == before, name

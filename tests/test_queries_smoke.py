@@ -424,11 +424,18 @@ def test_phrase_merge_batched_stale_counts_and_sequential_apply(spark):
 
 
 def test_bpe_vocab_memo_replays_and_keys_on_corpus(spark):
-    """memo=True must (a) return the identical merge table on a repeat
-    call without retraining (observed via the memo registry), (b) MISS
-    when the corpus plan differs, and (c) leave the registry untouched
-    at the default memo=False."""
+    """Both driver-value memos — the BPE merge table
+    (phrase_merge_rounds_batched) and the perceptron weights
+    (train_perceptron) — with memo=True must (a) return the identical
+    result on a repeat call without retraining (observed via the memo
+    registry), (b) MISS when the corpus plan differs, (c) MISS when the
+    params differ, and (d) leave the registry untouched at the default
+    memo=False."""
+    from pyspark.sql import functions as F
+
     import data_engineering_spark.operators.text as T
+    from data_engineering_spark.operators import memo
+    from data_engineering_spark.operators.classify import train_perceptron
 
     df = spark.createDataFrame(
         [(i, "new york city is in new york state") for i in range(5)],
@@ -437,26 +444,36 @@ def test_bpe_vocab_memo_replays_and_keys_on_corpus(spark):
     other = spark.createDataFrame(
         [(1, "san francisco bay area san francisco")], "doc_id long, text string"
     )
-    T._BPE_VOCAB_MEMO.clear()
-    cold = [tuple(r) for r in T.phrase_merge_rounds_batched(
-        df, passes=2, merges_per_pass=2, memo=True).collect()]
-    assert len(T._BPE_VOCAB_MEMO) == 1
-    cached_rows = T._BPE_VOCAB_MEMO[0][3]
-    # poison-pill the cached list's identity check: a HIT must come from
-    # the registry (same object), a retrain would rebuild a fresh list
-    warm_df = T.phrase_merge_rounds_batched(df, passes=2, merges_per_pass=2, memo=True)
-    assert T._BPE_VOCAB_MEMO[0][3] is cached_rows and len(T._BPE_VOCAB_MEMO) == 1
-    assert [tuple(r) for r in warm_df.collect()] == cold
-    # different corpus → miss → second entry
-    T.phrase_merge_rounds_batched(other, passes=2, merges_per_pass=2, memo=True)
-    assert len(T._BPE_VOCAB_MEMO) == 2
-    # different params on the same corpus → miss
-    T.phrase_merge_rounds_batched(df, passes=1, merges_per_pass=2, memo=True)
-    assert len(T._BPE_VOCAB_MEMO) == 3
-    # default memo=False neither reads nor writes the registry
-    T._BPE_VOCAB_MEMO.clear()
-    T.phrase_merge_rounds_batched(df, passes=1, merges_per_pass=1).collect()
-    assert T._BPE_VOCAB_MEMO == []
+    label = F.when(F.col("doc_id") % 2 == 0, 1).otherwise(-1)
+
+    def bpe(corpus, rounds, use_memo):
+        return [tuple(r) for r in T.phrase_merge_rounds_batched(
+            corpus, passes=rounds, merges_per_pass=2, memo=use_memo).collect()]
+
+    def perceptron(corpus, rounds, use_memo):
+        return train_perceptron(corpus, label, iterations=rounds, buckets=16, memo=use_memo)
+
+    for kind, run in [("bpe_vocab", bpe), ("perceptron_weights", perceptron)]:
+        entries = memo._REGISTRY[kind]
+        memo.clear()
+        cold = run(df, 2, True)
+        assert len(entries) == 1, kind
+        cached = entries[0][3]
+        # poison-pill the cached value's identity check: a HIT must come
+        # from the registry (same object), a retrain would add a fresh one
+        warm = run(df, 2, True)
+        assert entries[0][3] is cached and len(entries) == 1, kind
+        assert warm == cold, kind
+        # different corpus → miss → second entry
+        run(other, 2, True)
+        assert len(entries) == 2, kind
+        # different params on the same corpus → miss
+        run(df, 1, True)
+        assert len(entries) == 3, kind
+        # default memo=False neither reads nor writes the registry
+        memo.clear()
+        run(df, 1, False)
+        assert entries == [], kind
 
 
 def test_dedup_aware_split_never_straddles_clusters(spark):
