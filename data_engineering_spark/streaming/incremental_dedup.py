@@ -245,16 +245,9 @@ def _incremental_sink(index_dir, store_dir, pairs_dir, batch_fn, ingest_fn, pair
                 index_bk = store_old = None
             pairs, cand = ingest_fn(store_new, bk_new, index_bk, store_old)
             tag = F.lit(batch_id).alias("ingest_batch")
-            partition_overwrite(
-                pairs.select(*pair_cols, tag),
-                pairs_dir, "ingest_batch", count_rows=False,
-            )
-            partition_overwrite(
-                bk_new.select("*", tag), index_dir, "ingest_batch", count_rows=False
-            )
-            partition_overwrite(
-                store_new.select("*", tag), store_dir, "ingest_batch", count_rows=False
-            )
+            partition_overwrite(pairs.select(*pair_cols, tag), pairs_dir, "ingest_batch")
+            partition_overwrite(bk_new.select("*", tag), index_dir, "ingest_batch")
+            partition_overwrite(store_new.select("*", tag), store_dir, "ingest_batch")
         finally:
             store_new.unpersist()
             bk_new.unpersist()

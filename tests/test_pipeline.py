@@ -157,3 +157,146 @@ def test_retention_cutoff_crosses_month_boundary(spark, sf_dir, tmp_path):
     }
     # 20240129 is 3 days before 20240201 — well inside keep_days=7
     assert parts == {"20240129", "20240201"}
+
+
+def test_run_daily_needs_only_the_tables_it_reads(spark, sf_dir, tmp_path):
+    """A warehouse holding only the four TPC-H tables the run reads (no
+    events/documents/embeddings) must run daily and weekly: the run
+    registers only the views it reads, not every catalog table."""
+    import shutil
+
+    from data_engineering_spark.catalog import table_path
+    from data_engineering_spark.pipeline.daily import VIEWS, run_daily
+
+    src = str(tmp_path / "sf")
+    os.makedirs(src)
+    for name in VIEWS:
+        shutil.copyfile(table_path(sf_dir, name), table_path(src, name))
+    assert sorted(os.listdir(src)) == sorted(f"{n}.parquet" for n in VIEWS)
+    wh = str(tmp_path / "wh")
+    for date, weekly in (("20240110", False), ("20240111", True)):
+        recs = run_daily(spark, src, wh, date, weekly=weekly)
+        assert all(r.success_yn == "Y" for r in recs), [r.error_msg for r in recs]
+        assert len(recs) == (4 if weekly else 3)
+    assert spark.read.parquet(f"{wh}/t4_serving_index").count() == recs[-1].cretn_cnt > 0
+
+
+def test_counted_writes_equal_a_fresh_read(spark, sf_dir, tmp_path):
+    """Each writer's returned count (observed during the write) equals a
+    fresh read of what it wrote — empty frames included."""
+    from data_engineering_spark.sources.writers import write_serving_index
+
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    read = lambda p: spark.read.parquet(p).count()  # noqa: E731
+
+    t = str(tmp_path / "t")
+    assert truncate_and_load(orders.filter("o_orderkey % 3 = 0"), t) == read(t) > 0
+    assert truncate_and_load(nation.limit(0), t) == 0 == read(t)
+
+    s = str(tmp_path / "s")
+    assert write_serving_index(orders, s, "o_custkey", buckets=4) == read(s) > 0
+    assert write_serving_index(nation.limit(0), s, "n_nationkey") == 0 == read(s)
+
+    p = str(tmp_path / "p")
+    d1 = orders.filter("o_orderkey % 2 = 0").withColumn("bkup_dt", F.lit("20240101"))
+    d2 = orders.filter("o_orderkey % 5 = 0").withColumn("bkup_dt", F.lit("20240102"))
+    n1 = partition_overwrite(d1, p, "bkup_dt")
+    assert n1 == read(p) > 0
+    n2 = partition_overwrite(d2, p, "bkup_dt")
+    assert n2 == spark.read.parquet(p).filter("bkup_dt = '20240102'").count() > 0
+    # an empty frame counts 0 and touches no partition
+    assert partition_overwrite(d2.limit(0), p, "bkup_dt") == 0
+    got = dict(spark.read.parquet(p).groupBy("bkup_dt").count().rdd.map(tuple).collect())
+    assert got == {"20240101": n1, "20240102": n2}
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """The Spark jobs ``fn()`` launches, tagged by a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the (asynchronous) listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_counted_write_and_audit_launch_no_bookkeeping_jobs(spark, sf_dir, tmp_path):
+    """``truncate_and_load`` launches exactly the jobs of its write (no
+    read-back or count job after it); ``write_audit`` launches one."""
+    from datetime import datetime
+
+    from data_engineering_spark.pipeline.etl import AuditRecord, write_audit
+
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    plain = _job_ids(spark, lambda: nation.write.mode("overwrite").parquet(str(tmp_path / "a")))
+    counted = _job_ids(spark, lambda: truncate_and_load(nation, str(tmp_path / "b")))
+    assert len(plain) >= 1 and len(counted) == len(plain), (plain, counted)
+
+    rec = AuditRecord("20240101", "0:00:01", "j", "t", "r", 25, "Y", "", datetime(2024, 1, 1))
+    audit = str(tmp_path / "audit")
+    write_audit(spark, rec, audit)  # the first append creates the directory
+    assert len(_job_ids(spark, lambda: write_audit(spark, rec, audit))) == 1
+
+
+def test_audit_row_round_trips_under_system_tz(spark, tmp_path):
+    """The audit row reads back field for field, and ``platform_dt``
+    stores the instant the row path stored,
+    ``TimestampType().toInternal`` (naive datetime read in the system
+    TZ) — on a UTC box and on a UTC+9 box (the reference's zone), with
+    the session TZ pinned to UTC."""
+    import time
+    from datetime import datetime
+
+    from pyspark.sql import types as T
+
+    from data_engineering_spark.pipeline.etl import AuditRecord, write_audit
+
+    old_tz = os.environ.get("TZ")
+    try:
+        for tz in ("UTC", "Asia/Seoul"):
+            os.environ["TZ"] = tz
+            time.tzset()
+            rec = AuditRecord(
+                "20240101", "0:01:02", "t1.job", "t1_tbl", "t1.job-1704067200",
+                12345, "N", "boom: 한글 error", datetime(2024, 1, 1, 23, 30, 15, 123456),
+            )
+            audit = str(tmp_path / f"audit_{tz.replace('/', '_')}")
+            write_audit(spark, rec, audit)
+            df = spark.read.parquet(audit)
+            assert df.schema == AUDIT_SCHEMA
+            (row,) = df.selectExpr("*", "unix_micros(platform_dt) AS us").collect()
+            assert row.us == T.TimestampType().toInternal(rec.platform_dt), tz
+            got = row.asDict()
+            del got["us"]
+            assert got == vars(rec), tz
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
+def test_concurrent_counted_writes_keep_their_own_counts(spark, sf_dir, tmp_path):
+    """Writers running at once (the incremental-dedup sinks, one per
+    stream) each get their own observed count, never another's."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+
+    def write(i: int) -> int:
+        df = orders.limit(10 * (i + 1)).withColumn("b", F.lit(str(i)))
+        return partition_overwrite(df, str(tmp_path / f"w{i}"), "b")
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = [pool.submit(write, i) for i in range(8)]
+        counts = [f.result(timeout=300) for f in futures]
+    assert counts == [10 * (i + 1) for i in range(8)]
