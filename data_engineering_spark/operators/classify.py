@@ -82,22 +82,19 @@ def hashed_features(
     return feat.unionByName(bias)
 
 
-def _feats_prepared(
-    docs: DataFrame, buckets: int, id_col: str, text_col: str, cache: bool = True
-) -> DataFrame:
+def _feats_prepared(docs: DataFrame, buckets: int, id_col: str, text_col: str) -> DataFrame:
     """Hashed features persisted through the plan-keyed relation memo
     (``memo.persisted``, family ``cls_feats``, r14): every classifier
     query both TRAINS (3 iterations over the features) and SCORES
     (another full feature pass), so an unshared prep tokenized +
     md5-hashed the corpus twice per query. A session-level clearCache()
     (bench/driver harness) invalidates entries, so every timed run
-    still computes from parquet. ``cache=False`` — the rewrite-in-place
-    escape hatch — takes a per-call persist; ``memo.release`` frees it."""
+    still computes from parquet. A corpus rewritten in place follows
+    the ``memo`` module's reuse contract."""
     return plan_memo.persisted(
         docs,
         ("cls_feats", buckets, id_col, text_col),
         hashed_features(docs, buckets, id_col, text_col),
-        cache,
     )
 
 
@@ -108,7 +105,6 @@ def train_perceptron(
     buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: bool = True,
     memo: bool = False,
 ) -> tuple[list[tuple[int, int]], list[int]]:
     """Train the perceptron; returns ``(weights, errors_per_iter)`` —
@@ -121,11 +117,11 @@ def train_perceptron(
     start at zero, so iteration 1's update is the class-conditional
     token-count difference — deterministic from the data alone.
 
-    ``cache=False`` bypasses the session memo registry for the shared
-    feature prep (per-call persist, released before returning) — the
-    escape hatch for corpora rewritten in place mid-session (the
-    ``lattice_unit_prep`` caveat, r13/r14 advice). ``memo=True``
-    additionally replays the TRAINED WEIGHTS (``memo.value`` kind
+    The shared feature prep is a ``memo.persisted`` relation: a corpus
+    rewritten in place by a Spark write reads fresh, one rewritten
+    outside Spark needs ``spark.catalog.refreshByPath`` first (the
+    ``memo`` module's reuse contract). ``memo=True`` additionally
+    replays the TRAINED WEIGHTS (``memo.value`` kind
     ``perceptron_weights``) when the same (docs plan, label, params)
     already trained this session: four classifier queries each replay
     the identical 3-iteration train loop on the same corpus before
@@ -138,7 +134,7 @@ def train_perceptron(
         "perceptron_weights",
         docs,
         (iterations, buckets, id_col, text_col, str(label)),
-        lambda: _train_perceptron(docs, label, iterations, buckets, id_col, text_col, cache),
+        lambda: _train_perceptron(docs, label, iterations, buckets, id_col, text_col),
         memo,
     )
     return list(result), list(errors)
@@ -151,12 +147,11 @@ def _train_perceptron(
     buckets: int,
     id_col: str,
     text_col: str,
-    cache: bool,
 ) -> tuple[list[tuple[int, int]], list[int]]:
     spark = docs.sparkSession
     # memo-managed persist (r14): shared with classifier_margins so a
     # train-then-score query computes the features once, not twice
-    feats = _feats_prepared(docs, buckets, id_col, text_col, cache)
+    feats = _feats_prepared(docs, buckets, id_col, text_col)
     labels = docs.select(
         F.col(id_col).alias("doc_id"), label.cast("long").alias("y")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -205,7 +200,7 @@ def _train_perceptron(
                 break
     finally:
         # a registered feats relation stays for the consumers about to
-        # hit it (classifier_margins); a per-call persist is released
+        # hit it (classifier_margins); an unregistered one is released
         labels.unpersist()
         plan_memo.release(feats)
     return sorted(w.items()), errors
@@ -217,23 +212,16 @@ def classifier_margins(
     buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: bool = True,
 ) -> DataFrame:
     """Score every document under trained weights: ``(doc_id, margin,
     pred)`` with ``pred = margin > 0``. One broadcast join + one
     doc-keyed partial agg; margins are exact int64 (see module
     docstring for the headroom bound). Total over ALL documents — a doc
     whose every feature bucket carries zero weight (pruned from the
-    nonzero table) scores margin 0, not a dropped row. ``cache=False``
-    bypasses the shared-feature memo registry (scoring reads the
-    features exactly once, so no per-call persist is needed) — the
-    rewrite-in-place escape hatch."""
+    nonzero table) scores margin 0, not a dropped row. The features
+    come from the shared ``cls_feats`` memo entry."""
     spark = docs.sparkSession
-    feats = (
-        _feats_prepared(docs, buckets, id_col, text_col)
-        if cache
-        else hashed_features(docs, buckets, id_col, text_col)
-    )
+    feats = _feats_prepared(docs, buckets, id_col, text_col)
     # Keep the BIAS bucket in the weight table even when its trained
     # weight pruned to zero (r14): every document carries exactly one
     # bias feature row, so the broadcast inner join then reaches EVERY

@@ -323,7 +323,6 @@ def dsir_weights(
     buckets: int = 4096,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"): fit
@@ -350,10 +349,9 @@ def dsir_weights(
     stream joined to that broadcast plus ONE doc-keyed partial agg. The
     corpus is scanned twice (q-counts, scoring) — at scale, persist the
     q-count table per ingest batch instead of recomputing; ``target`` is
-    the curated set and is small by definition. ``cache=False``
-    bypasses the session memo registry for the shared feature stream
-    (per-call persist, never re-served) - the rewrite-in-place escape
-    hatch (r14 ADVICE asked for parity with the lattice preps)."""
+    the curated set and is small by definition. The shared feature
+    stream is a ``memo.persisted`` relation and follows that module's
+    reuse contract for a corpus rewritten in place."""
     # r14: the corpus feature stream is consumed TWICE (q-counts and the
     # scoring join) and its per-gram md5 fan-out is CPU-bound off an
     # under-split bench scan — _spread fans it across cores (isolated
@@ -363,9 +361,7 @@ def dsir_weights(
     from .dedup import _spread
 
     raw = _hashed_ngram_stream(_spread(corpus), text_col, id_col, buckets)
-    feats = plan_memo.persisted(
-        corpus, ("dsir_feats", text_col, id_col, buckets), raw, cache
-    )
+    feats = plan_memo.persisted(corpus, ("dsir_feats", text_col, id_col, buckets), raw)
     q = feats.groupBy("b").agg(F.count(F.lit(1)).alias("qc"))
     w = Window.partitionBy()
     # ONE pass over the target stream, ZERO eager side effects: the two
@@ -973,7 +969,6 @@ def boilerplate_strip(
     id_col: str = "doc_id",
     block: int = 8,
     min_df: int = 3,
-    cache: bool = True,
 ) -> DataFrame:
     """Corpus-frequent boilerplate removal (the CCNet/RefinedWeb stage):
     segment each document into non-overlapping ``block``-token blocks,
@@ -991,9 +986,9 @@ def boilerplate_strip(
     adversarial all-dup data AQE decides instead); reconstruction is
     ONE doc-keyed groupBy whose collect_list is bounded by the doc's
     own block count. Three corpus-scaling exchanges total, none wider
-    than (id, block). ``cache=False`` bypasses the session memo registry
-    for the shared block fan-out (per-call persist, never re-served) -
-    the rewrite-in-place escape hatch (r14 ADVICE)."""
+    than (id, block). The shared block fan-out is a ``memo.persisted``
+    relation and follows that module's reuse contract for a corpus
+    rewritten in place."""
     from .joins import broadcast_if_small
 
     # r14: the block fan-out feeds BOTH the df-count aggregate and the
@@ -1006,7 +1001,7 @@ def boilerplate_strip(
 
     raw = chunk_sliding(_spread(df), window=block, stride=block,
                         text_col=text_col, id_col=id_col)
-    chunks = plan_memo.persisted(df, ("bp_chunks", text_col, id_col, block), raw, cache)
+    chunks = plan_memo.persisted(df, ("bp_chunks", text_col, id_col, block), raw)
     dfreq = (
         chunks.select(id_col, "chunk_text")
         .distinct()

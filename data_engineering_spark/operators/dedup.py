@@ -54,7 +54,6 @@ __all__ = [
     "shingles",
     "shingle_hashes",
     "shingle_hashes_portable",
-    "minhash_signature",
     "minhash_band_buckets",
     "minhash_near_dedup",
     "jaccard_verify_pairs",
@@ -87,6 +86,12 @@ def _size_bytes(conf_value: str) -> int:
 # kept under the old private name for this module's call sites
 from .joins import input_bytes as _input_bytes  # noqa: E402
 
+
+# _spread's default per-partition byte budget: 64 KB of COMPRESSED
+# parquet ≈ ~0.5 MB of raw text ≈ a healthy task of the md5/shingle work
+# it guards (r15 interleaved A/B: ~10 partitions beat 32 for every
+# non-portable spread family at sf0.1).
+_SPREAD_PARTITION_BYTES = 64 << 10
 
 # Per-partition byte budget for the densest _spread call sites — the
 # portable-md5 minhash signature family, whose 32 seeded-md5
@@ -123,9 +128,7 @@ def _spread(df: DataFrame, per_partition_bytes: int | None = None) -> DataFrame:
     spread-adjacent queries running FASTER at 8 cores than 32, and the
     r15 interleaved A/B confirmed ~10 partitions beat 32 on this box
     for every non-portable spread family at sf0.1. The per-partition
-    budget (``SPARK_GRAFT_SPREAD_PARTITION_BYTES``, default 64 KB of
-    COMPRESSED parquet ≈ ~0.5 MB of raw text ≈ a healthy task of the
-    md5/shingle work this guards) is deliberately far below
+    budget (``_SPREAD_PARTITION_BYTES``) is deliberately far below
     maxPartitionBytes: _spread wraps the repo's most CPU-dense per-row
     stages, where work-per-byte is 2-3 orders above a plain scan.
     Call sites with measurably denser work pass ``per_partition_bytes``
@@ -138,8 +141,6 @@ def _spread(df: DataFrame, per_partition_bytes: int | None = None) -> DataFrame:
     splits — so building a dedup query never forces plan analysis
     through the RDD API. Frames with no file source (in-memory test
     data) fall back to the RDD partition probe, which is cheap there."""
-    import os
-
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     nbytes = _input_bytes(df)
@@ -160,9 +161,7 @@ def _spread(df: DataFrame, per_partition_bytes: int | None = None) -> DataFrame:
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
         scan_tasks = max(len(df.inputFiles()), -(-nbytes // max(max_split, 1)))
-        budget = per_partition_bytes or int(
-            os.environ.get("SPARK_GRAFT_SPREAD_PARTITION_BYTES", str(64 << 10))
-        )
+        budget = per_partition_bytes or _SPREAD_PARTITION_BYTES
         target = min(target, max(2, -(-nbytes // max(budget, 1))))
     if scan_tasks >= target:
         return df
@@ -289,27 +288,6 @@ def shingle_hashes_portable(col: Column | str, n: int = 3) -> Column:
     return F.transform(g, _md5_60bits)
 
 
-def minhash_signature(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_hashes: int = 32, n: int = 3
-) -> DataFrame:
-    """MinHash signature: per doc, min over shingles of xxhash64(seed_i,
-    base_hash(shingle)) for each of ``num_hashes`` seeded hash functions.
-
-    Pure projection — no explode, no shuffle: shingle fingerprints are
-    hash-composed longs (``shingle_hashes`` — no gram strings built), and
-    each of the K seeded hashes is an 8-byte rehash folded with
-    ``array_min``. Per-doc work is K cheap long hashes per shingle, and
-    the signature build adds zero exchanges (the old explode→groupBy
-    shape shuffled every (doc, shingle) row)."""
-    hs = shingle_hashes(text_col, n)
-    base = _spread(df).select(F.col(id_col), hs.alias("hs"))
-    cols = [
-        F.array_min(F.transform(F.col("hs"), lambda h: F.xxhash64(F.lit(i), h))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return base.select(F.col(id_col), *cols)
-
-
 def minhash_band_hashes_arrow(num_hashes: int = 32, bands: int = 8):
     """pandas_udf: shingle-hash array → ``bands`` band-bucket longs, all
     permutations evaluated in ONE vectorized numpy pass per Arrow batch.
@@ -391,7 +369,6 @@ def minhash_near_dedup(
     max_bucket: int | None | str = "auto",
     verify_join: str = "auto",
     signature_impl: str = "arrow",
-    cache: bool = True,
 ) -> DataFrame:
     """MinHash + banded LSH near-dedup → (id_a, id_b, jaccard) pairs.
 
@@ -443,12 +420,11 @@ def minhash_near_dedup(
       ``_SMALL_CORPUS_BYTES`` leave the join to AQE (any runtime
       broadcast is provably tiny), larger or unknowable inputs get the
       hint. ``"shuffle_hash"`` / ``"none"`` force either way.
-    - ``cache=False`` bypasses the session memo registry for the two
-      shared-prep persists (per-call persist, never re-served): the
-      registry serves a SAME-PLAN re-run from cache, which is wrong for
-      callers re-reading a path whose files were rewritten in place
-      mid-session (the ``lattice_unit_prep`` rewrite-in-place caveat,
-      r13 advice).
+
+    Both shared preps are ``memo.persisted`` relations: a corpus path
+    rewritten in place by a Spark write reads fresh on the next call,
+    one rewritten outside Spark needs ``spark.catalog.refreshByPath``
+    first (the ``memo`` module's reuse contract).
     """
     small_corpus: bool | None = None  # resolved lazily, probed at most once
 
@@ -492,7 +468,6 @@ def minhash_near_dedup(
         sh_plan,
         ("minhash_sh", id_col, text_col, n, signature_impl == "portable"),
         sh_plan,
-        cache,
     )
     buckets = minhash_band_buckets(
         sh, id_col=id_col, num_hashes=num_hashes, bands=bands,
@@ -524,7 +499,6 @@ def minhash_near_dedup(
         cand_plan,
         ("minhash_cand", id_col, num_hashes, bands, n, signature_impl, max_bucket),
         cand_plan,
-        cache,
     )
     return jaccard_verify_pairs(
         cand, sh, id_col=id_col, threshold=threshold, hint_verify=hint_verify
@@ -794,7 +768,6 @@ def simhash_near_dedup(
     max_hamming: int = 3,
     signature_impl: str = "expr",
     max_bucket: int | None | str = "auto",
-    cache: bool = True,
 ) -> DataFrame:
     """SimHash near-dedup: block on 16-bit sub-bands (pigeonhole: hamming ≤ 3
     ⇒ at least one of 4 bands identical), verify with bit_count(a XOR b).
@@ -833,12 +806,9 @@ def simhash_near_dedup(
         # The persisted relation is 16 bytes/doc, storage-trivial even
         # at corpus scale (measured: 30× sweep 9.4 s → 4.8 s). Routed
         # through the bounded memo registry (never unpersisted per-call
-        # otherwise — the r11/r12 shared-prep policy). ``cache=False``
-        # takes a per-call persist instead — the rewrite-in-place
-        # caller's opt-out (r13 advice; see minhash_near_dedup).
-        sig = plan_memo.persisted(
-            sig, ("simhash_sig", id_col, text_col, signature_impl), sig, cache
-        )
+        # otherwise — the r11/r12 shared-prep policy; reuse contract
+        # as in minhash_near_dedup).
+        sig = plan_memo.persisted(sig, ("simhash_sig", id_col, text_col, signature_impl), sig)
     bands = sig.select(
         id_col,
         "simhash",

@@ -6,8 +6,8 @@ a staged relation. This module owns every reuse decision. Two kinds
 share one registry and one lock:
 
 - :func:`persisted`: a MEMORY_AND_DISK shared prep per distinct (input
-  plan, params). ``cache=False`` takes a per-call persist that is never
-  registered; :func:`release` frees a relation the registry does not own.
+  plan, params); :func:`release` frees a relation the registry does not
+  own (an unhashable plan's unregistered persist).
 - :func:`value`: a driver-side value (BPE merge rows, perceptron
   weights) per distinct (input plan, params). ``memo=False`` just builds.
 
@@ -19,8 +19,14 @@ evicted relations are unpersisted outside the lock. One lock guards
 every mutation: overlapping streaming ``foreachBatch`` threads once
 raced an unguarded check-then-pop eviction into a failed query.
 
-Reuse caveat (as for Spark's own CacheManager): a path rewritten in
-place mid-session serves the stale entry; such callers opt out.
+Reuse contract for a path rewritten in place mid-session (probed on
+Spark 4.1.2, ``local[2]``): a Spark ``write.mode("overwrite")`` to the
+path re-caches it, so the next hit returns the new rows. A rewrite
+outside Spark (pyarrow, another process) serves stale rows, and no
+per-call opt-out helps: Spark's CacheManager matches any fresh persist
+of the same plan to the old cached data by plan semantics. The caller
+runs ``spark.catalog.refreshByPath(path)`` (or ``clearCache()``) after
+such a rewrite; the next call then returns fresh rows.
 
 Liveness: a session ``clearCache()`` (bench and driver harness run one
 between queries) uncaches relations underneath the registry. An entry
@@ -107,13 +113,13 @@ def _unpersist(relations: list[DataFrame]) -> None:
             pass
 
 
-def persisted(src: DataFrame, params: tuple, out: DataFrame, cache: bool = True) -> DataFrame:
+def persisted(src: DataFrame, params: tuple, out: DataFrame) -> DataFrame:
     """``out`` persisted MEMORY_AND_DISK, served from the registry when
     the same (``src`` plan, ``params``) was registered this session.
     ``out`` is derived from ``src`` (often ``src`` itself). The caller
     must not unpersist a registered relation; :func:`release` does the
     right thing either way."""
-    h = _plan_hash(src) if cache else None
+    h = _plan_hash(src)
     if h is not None:
         hit = _lookup(RELATIONS, h, src, params)
         if hit is not None:

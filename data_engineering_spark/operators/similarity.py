@@ -386,7 +386,6 @@ def cosine_near_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a,b), a<b, with
     lattice cosine ≥ threshold. Membership is decided by
@@ -401,11 +400,11 @@ def cosine_near_pairs(
     the optimizer pushing the admission's nn conjuncts below the Arrow
     dot UDF (r10 advice).
 
-    ``cache=False`` opts out of the memoized prep registry: the memo is
-    keyed on the LOGICAL plan, so a corpus whose files are rewritten
-    in place mid-session would silently reuse the stale prep (r11
-    advice — same reuse caveat as Spark's own CacheManager)."""
-    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=cache).filter(
+    The prep is a ``memo.persisted`` relation keyed on the LOGICAL
+    plan: a corpus rewritten in place by a Spark write reads fresh, one
+    rewritten outside Spark needs ``spark.catalog.refreshByPath`` first
+    (the ``memo`` module's reuse contract)."""
+    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=True).filter(
         F.col("nn") > 0
     )
     a = prep.select(
@@ -432,7 +431,6 @@ def embedding_near_dedup(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate resolution: every vector is assigned
     the min id among its cosine-≥-threshold neighborhood (itself included,
@@ -458,9 +456,9 @@ def embedding_near_dedup(
     zero vectors keep their own-canonical row) — null-row robustness of
     the Arrow dot must not depend on predicate pushdown (r10 advice).
 
-    ``cache=False`` opts out of the memoized prep registry for
-    rewrite-in-place corpora (r11 advice — see cosine_near_pairs)."""
-    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=cache)
+    Reuse contract for a corpus rewritten in place: as in
+    ``cosine_near_pairs``."""
+    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=True)
     nz = prep.filter(F.col("nn") > 0)
     a = nz.select(
         F.col("vec_id").alias("id_a"), F.col("qv").alias("qa"), F.col("nn").alias("na")
@@ -600,7 +598,6 @@ def embedding_near_dedup_bucketed(
     max_bucket: int | None = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> DataFrame:
     """The 100 TB-safe twin of ``embedding_near_dedup``: banded-LSH
     candidate generation → exact cosine verify on candidates only →
@@ -659,8 +656,7 @@ def embedding_near_dedup_bucketed(
     # nn > 0 pre-filter on the verify sides: semantics-free (admission
     # excludes nn = 0) and keeps null-row robustness off the optimizer;
     # the canonical tail below still unions EVERY id as its own row.
-    # cache=False opt-out for rewrite-in-place corpora (r11 advice).
-    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=cache)
+    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=True)
     nz = prep.filter(F.col("nn") > 0)
     va = nz.select(
         F.col("vec_id").alias("id_a"), F.col("qv").alias("qa"), F.col("nn").alias("na")

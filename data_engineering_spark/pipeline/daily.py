@@ -13,6 +13,7 @@ date is safe end to end.
 
 from __future__ import annotations
 
+import time
 from datetime import datetime, timedelta
 
 from pyspark.sql import SparkSession
@@ -21,7 +22,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import QUERIES
 from ..sources.writers import partition_overwrite, retention_prune, truncate_and_load
-from .etl import AuditRecord, run_sql_etl, write_audit
+from .etl import AuditRecord, _audit_record, run_sql_etl, write_audit
 
 __all__ = ["run_daily"]
 
@@ -114,19 +115,9 @@ def run_daily(
             "last_order_dt",
         )
     )
-    start = datetime.utcnow()
+    start = time.time()
     cnt = partition_overwrite(mart, f"{warehouse_dir}/t2_cust_mart", "bkup_dt")
-    rec = AuditRecord(
-        bat_dt=batch_date,
-        bat_req_tm="0:00:00",
-        job_nm="t2.cust_mart",
-        taget_tbl_nm="t2_cust_mart",
-        job_run_id=f"t2-{int(start.timestamp())}",
-        cretn_cnt=cnt,
-        success_yn="Y",
-        error_msg="",
-        platform_dt=start,
-    )
+    rec = _audit_record("t2.cust_mart", "t2_cust_mart", batch_date, start, cnt)
     write_audit(spark, rec, audit_dir)
     records.append(rec)
 
@@ -144,19 +135,10 @@ def run_daily(
     if weekly:
         from .. import queries_relational  # noqa: F401 — side-effect: registers queries
 
+        start = time.time()
         serving = QUERIES["flagship_serving_index"](spark, sf_dir)
         cnt = truncate_and_load(serving, f"{warehouse_dir}/t4_serving_index")
-        rec = AuditRecord(
-            bat_dt=batch_date,
-            bat_req_tm="0:00:00",
-            job_nm="t4.serving_index",
-            taget_tbl_nm="t4_serving_index",
-            job_run_id=f"t4-{int(start.timestamp())}",
-            cretn_cnt=cnt,
-            success_yn="Y",
-            error_msg="",
-            platform_dt=start,
-        )
+        rec = _audit_record("t4.serving_index", "t4_serving_index", batch_date, start, cnt)
         write_audit(spark, rec, audit_dir)
         records.append(rec)
 

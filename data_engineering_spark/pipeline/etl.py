@@ -65,6 +65,27 @@ def _elapsed_str(seconds: float) -> str:
     return str(timedelta(seconds=seconds)).split(".")[0]
 
 
+def _audit_record(
+    job_nm: str, target: str, bat_dt: str, start: float, cnt: int, error: str | None = None
+) -> AuditRecord:
+    """One job's audit row from its own ``start`` (``time.time()`` when
+    the job began), built when the job ends: ``bat_req_tm`` is the time
+    elapsed since ``start``, ``platform_dt`` is ``start`` as a naive UTC
+    datetime and ``job_run_id`` carries its epoch second. A job that
+    raised passes its ``error`` and is marked failed."""
+    return AuditRecord(
+        bat_dt=bat_dt,
+        bat_req_tm=_elapsed_str(time.time() - start),
+        job_nm=job_nm,
+        taget_tbl_nm=target,
+        job_run_id=f"{job_nm}-{int(start)}",
+        cretn_cnt=cnt,
+        success_yn="Y" if error is None else "N",
+        error_msg="" if error is None else error[:1000],
+        platform_dt=datetime.fromtimestamp(start, timezone.utc).replace(tzinfo=None),
+    )
+
+
 def run_sql_etl(
     spark: SparkSession,
     sql_text: str,
@@ -82,7 +103,7 @@ def run_sql_etl(
     (success_yn='N'), mirroring the reference's try/except→log pattern
     (``AWS_GLUE_ETL.py:137-163``)."""
     start = time.time()
-    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    target = target_dir.rstrip("/").rsplit("/", 1)[-1]
     try:
         df = spark.sql(rewrite_redshift_sql(sql_text))
         if mode == "partition_overwrite":
@@ -91,29 +112,9 @@ def run_sql_etl(
             cnt = partition_overwrite(df, target_dir, partition_col)
         else:
             cnt = truncate_and_load(df, target_dir)
-        rec = AuditRecord(
-            bat_dt=bat_dt,
-            bat_req_tm=_elapsed_str(time.time() - start),
-            job_nm=job_nm,
-            taget_tbl_nm=target_dir.rstrip("/").rsplit("/", 1)[-1],
-            job_run_id=f"{job_nm}-{int(start)}",
-            cretn_cnt=cnt,
-            success_yn="Y",
-            error_msg="",
-            platform_dt=now,
-        )
+        rec = _audit_record(job_nm, target, bat_dt, start, cnt)
     except Exception as exc:  # noqa: BLE001 — the audit row carries the error
-        rec = AuditRecord(
-            bat_dt=bat_dt,
-            bat_req_tm=_elapsed_str(time.time() - start),
-            job_nm=job_nm,
-            taget_tbl_nm=target_dir.rstrip("/").rsplit("/", 1)[-1],
-            job_run_id=f"{job_nm}-{int(start)}",
-            cretn_cnt=0,
-            success_yn="N",
-            error_msg=str(exc)[:1000],
-            platform_dt=now,
-        )
+        rec = _audit_record(job_nm, target, bat_dt, start, 0, str(exc))
     if audit_dir:
         write_audit(spark, rec, audit_dir)
     return rec

@@ -78,29 +78,26 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    # Runtime bloom-filter injection: back to Spark's own default (ON),
-    # r15. History: injection is gated on a ≥10 GB application-side
-    # SCAN, but plans rooted in cached relations bypass that estimate,
-    # and the r14 4-batch replay plans carried ~80 injected
-    # bloom_filter_agg scalar subqueries over batch-sized cached
-    # relations — r14 turned injection off session-wide on that
-    # evidence (~15% of the replay) plus the r10 driver-heap finding
-    # (the sizing caps below bound that side). r15 removed the misfire
-    # surface itself: the replays derive their pair log in ONE
-    # batch-ordered plan (streaming/incremental_dedup.py), and the
-    # interleaved A/B on the new plans shows injection now WINS or ties
-    # everywhere it fires — dedup_minhash_portable 3.59 vs 4.06 s,
-    # flagship_serving_index 1.62 vs 1.82 s, canonical_portable 7.67 vs
-    # 8.70 s, capped embed replay 3.16 vs 3.55 s, st_streaming_dedup
-    # flat — so the r14 session-wide off-default (a config fix for an
-    # algorithm problem) is retired per the r14 verdict's own item 2.
-    # SPARK_GRAFT_RUNTIME_BLOOM=0 force-disables for a profile that
-    # needs it; the sizing caps below still bound a misfired build to
-    # ~100 KB per task.
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "false" if os.environ.get("SPARK_GRAFT_RUNTIME_BLOOM") == "0" else "true",
-    )
+    # Runtime bloom-filter injection is left at Spark's own default
+    # (ON; a fresh 4.1.2 session reads true), r15. History: injection
+    # is gated on a ≥10 GB application-side SCAN, but plans rooted in
+    # cached relations bypass that estimate, and the r14 4-batch replay
+    # plans carried ~80 injected bloom_filter_agg scalar subqueries over
+    # batch-sized cached relations — r14 turned injection off
+    # session-wide on that evidence (~15% of the replay) plus the r10
+    # driver-heap finding (the sizing caps below bound that side). r15
+    # removed the misfire surface itself: the replays derive their pair
+    # log in ONE batch-ordered plan (streaming/incremental_dedup.py),
+    # and the interleaved A/B on the new plans shows injection now WINS
+    # or ties everywhere it fires — dedup_minhash_portable 3.59 vs
+    # 4.06 s, flagship_serving_index 1.62 vs 1.82 s, canonical_portable
+    # 7.67 vs 8.70 s, capped embed replay 3.16 vs 3.55 s,
+    # st_streaming_dedup flat — so the r14 session-wide off-default (a
+    # config fix for an algorithm problem) is retired per the r14
+    # verdict's own item 2. The sizing caps below still bound a
+    # misfired build to ~100 KB per task; tests/test_plans.py pins that
+    # the replay and pagerank plans build no bloom over a cached
+    # relation.
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "100000")
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "4194304")
     return spark

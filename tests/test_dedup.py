@@ -462,7 +462,8 @@ def test_lattice_prep_cache_is_memoized_and_bounded(spark):
     repeated invocations on the same corpus return the SAME persisted
     prep (r10 advice: each re-invocation used to add another
     session-lifetime MEMORY_AND_DISK copy), and only genuinely distinct
-    inputs beyond the cap evict (oldest first)."""
+    inputs beyond the cap evict (oldest first). ``cache=False`` returns
+    the same rows without a registry entry."""
     from data_engineering_spark.operators import memo
     from data_engineering_spark.operators import similarity as sim
 
@@ -480,6 +481,13 @@ def test_lattice_prep_cache_is_memoized_and_bounded(spark):
     p1 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
     p2 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
     assert p2 is p1
+    assert len(relations) == before + 1
+    # cache=False (the incremental_dedup store preps): same rows and no
+    # registry entry (its storageLevel would read p1's: Spark looks the
+    # cache up by plan semantics)
+    raw = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=False)
+    assert raw is not p1
+    assert sorted(map(tuple, raw.collect())) == sorted(map(tuple, p1.collect()))
     assert len(relations) == before + 1
     # different params on the same input do NOT share
     p3 = sim.lattice_unit_prep(
@@ -1262,55 +1270,3 @@ def test_lsh_buckets_pandas_null_and_ragged_rows_drop_cleanly(spark):
         "vec_id", F.posexplode(lsh_buckets_pandas(F.col("v"), 8, 4, 2))
     )
     assert {r.vec_id for r in exploded.collect()} == {1, 2}
-
-
-def test_near_dedup_cache_optout_bypasses_registry(spark, planted):
-    """Every shared-prep consumer's cache=False hatch must not register
-    in the session memo registry (the r13 advice's rewrite-in-place
-    caller: a same-plan re-run over rewritten files must re-read fresh),
-    while producing the same rows as the default cached path: minhash,
-    simhash, the dsir feature stream, the boilerplate block fan-out,
-    the perceptron features (training and scoring) and the lattice
-    prep."""
-    from data_engineering_spark.operators import memo
-    from data_engineering_spark.operators.classify import (
-        classifier_margins,
-        train_perceptron,
-    )
-    from data_engineering_spark.operators.curation import boilerplate_strip, dsir_weights
-    from data_engineering_spark.operators.similarity import lattice_unit_prep
-
-    label = F.when(F.col("doc_id") <= 3, 1).otherwise(-1)
-    target = planted.filter(F.col("doc_id") <= 2)
-    vecs = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])], ["vec_id", "embedding"]
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    def perceptron(cache):
-        w, errors = train_perceptron(planted, label, buckets=16, cache=cache)
-        return w, errors, rows(classifier_margins(planted, w, buckets=16, cache=cache))
-
-    cases = {
-        "minhash": lambda cache: rows(
-            minhash_near_dedup(planted, threshold=0.5, cache=cache)
-        ),
-        "simhash": lambda cache: rows(simhash_near_dedup(planted, cache=cache)),
-        "dsir": lambda cache: rows(dsir_weights(planted, target, buckets=64, cache=cache)),
-        "boilerplate": lambda cache: rows(
-            boilerplate_strip(planted, block=2, min_df=2, cache=cache)
-        ),
-        "perceptron": perceptron,
-        "lattice": lambda cache: rows(
-            lattice_unit_prep(vecs, "vec_id", "embedding", "vec_id", cache=cache)
-        ),
-    }
-    relations = memo._REGISTRY[memo.RELATIONS]
-    for name, run in cases.items():
-        want = run(True)
-        before = [id(e[3]) for e in relations]
-        assert run(False) == want, name
-        # no new registry entries from the cache=False call
-        assert [id(e[3]) for e in relations] == before, name

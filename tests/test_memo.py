@@ -42,3 +42,56 @@ def test_value_memo_cap_holds_under_thread_contention(spark):
     finally:
         sys.setswitchinterval(old)
         memo.clear()
+
+
+def _sum_v(spark, path: str):
+    """``sum(v)`` over a ``memo.persisted`` relation of the table at
+    ``path``, with the relation handed out (a hit returns the same one)."""
+    from pyspark.sql import functions as F
+
+    src = spark.read.parquet(path)
+    out = memo.persisted(src, ("sum_v_probe",), src.select("v"))
+    return out, out.agg(F.sum("v")).first()[0]
+
+
+def test_spark_overwrite_in_place_gives_a_fresh_hit(spark, tmp_path):
+    """A Spark overwrite of the source path re-caches it: the next call
+    is a registry hit (the same relation, no new entry) that returns
+    the new rows."""
+    path = str(tmp_path / "t")
+    spark.range(10).selectExpr("id", "id AS v").write.parquet(path)
+    memo.clear()
+    try:
+        first, total = _sum_v(spark, path)
+        assert total == 45
+        n = len(memo._REGISTRY[memo.RELATIONS])
+        spark.range(10).selectExpr("id", "id + 1000 AS v").write.mode("overwrite").parquet(path)
+        again, total = _sum_v(spark, path)
+        assert again is first and len(memo._REGISTRY[memo.RELATIONS]) == n
+        assert total == 10045
+    finally:
+        memo.clear()
+
+
+def test_out_of_band_rewrite_is_fresh_after_refresh_by_path(spark, tmp_path):
+    """A rewrite outside Spark is not seen through Spark's cache (the
+    stale read the memo docstring states); after
+    ``spark.catalog.refreshByPath`` the next call returns the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(pa.table({"id": list(range(10)), "v": list(range(10))}), path / "part.parquet")
+    memo.clear()
+    try:
+        assert _sum_v(spark, str(path))[1] == 45
+        pq.write_table(
+            pa.table({"id": list(range(10)), "v": [i + 2000 for i in range(10)]}),
+            path / "part.parquet",
+        )
+        assert _sum_v(spark, str(path))[1] == 45  # stale: served from the cache
+        spark.catalog.refreshByPath(str(path))
+        assert _sum_v(spark, str(path))[1] == 20045
+    finally:
+        memo.clear()

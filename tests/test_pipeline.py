@@ -300,3 +300,34 @@ def test_concurrent_counted_writes_keep_their_own_counts(spark, sf_dir, tmp_path
         futures = [pool.submit(write, i) for i in range(8)]
         counts = [f.result(timeout=300) for f in futures]
     assert counts == [10 * (i + 1) for i in range(8)]
+
+
+def test_weekly_audit_rows_carry_their_own_job_times(spark, sf_dir, tmp_path, monkeypatch):
+    """Every audit row of a weekly run is stamped from its own job:
+    ``platform_dt`` rises in execution order (t4 after t2),
+    ``job_run_id`` carries the row's own start second, and
+    ``bat_req_tm`` is the job's elapsed time, not a constant (each
+    mart/serving write is slowed past one second to show it)."""
+    import time
+    from datetime import timezone
+
+    from data_engineering_spark.pipeline import daily
+
+    def slowed(write):
+        def run(*args, **kwargs):
+            time.sleep(1.1)
+            return write(*args, **kwargs)
+
+        return run
+
+    monkeypatch.setattr(daily, "partition_overwrite", slowed(daily.partition_overwrite))
+    monkeypatch.setattr(daily, "truncate_and_load", slowed(daily.truncate_and_load))
+    recs = daily.run_daily(spark, sf_dir, str(tmp_path / "wh"), "20240110", weekly=True)
+    by_job = {r.job_nm: r for r in recs}
+    assert by_job["t4.serving_index"].platform_dt > by_job["t2.cust_mart"].platform_dt
+    assert [r.platform_dt for r in recs] == sorted(r.platform_dt for r in recs)
+    for r in recs:
+        start = int(r.platform_dt.replace(tzinfo=timezone.utc).timestamp())
+        assert r.job_run_id == f"{r.job_nm}-{start}", r
+    for job in ("t2.cust_mart", "t4.serving_index"):
+        assert by_job[job].bat_req_tm != "0:00:00", by_job[job]

@@ -4,6 +4,8 @@ blocks predicate pushdown, these fail before any benchmark notices."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -446,13 +448,12 @@ def test_partition_pruning_reads_one_partition(spark, sf_dir, tmp_path):
 def test_runtime_bloom_filter_injects_on_selective_fact_join(spark, sf_dir):
     """At warehouse scale a selective dim-side filter should seed a
     runtime bloom filter that prunes the fact scan before the shuffle
-    (Spark's runtime.bloomFilter — OFF by default in our session since
-    r14 because it misfires on cached batch-sized relations, but
-    re-enablable for a cluster profile via SPARK_GRAFT_RUNTIME_BLOOM).
-    The size thresholds that gate it never trip at test SF, so this test
-    emulates that cluster profile by enabling injection and lowering the
-    thresholds — asserting our declarative plans stay injection-eligible
-    (a hand-rolled pre-shuffle or UDF filter would silently forfeit
+    (Spark's runtime.bloomFilter — ON by default, Spark's own setting,
+    which the session leaves alone). The size thresholds that gate it
+    never trip at test SF, so this test emulates the cluster profile by
+    enabling injection explicitly and lowering the thresholds —
+    asserting our declarative plans stay injection-eligible (a
+    hand-rolled pre-shuffle or UDF filter would silently forfeit
     this)."""
     old = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": None,
@@ -593,9 +594,9 @@ def test_runtime_bloom_filter_prunes_fact_scan_at_scale(spark, sf_dir):
     try:
         # broadcast off: give the bloom filter a shuffle join to prune
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # the session default is now OFF (r14: the automatic injection
-        # misfires on cached batch-sized relations — see session.py);
-        # this test models the CLUSTER profile, so it opts in explicitly
+        # injection is Spark's default, but an earlier test may have
+        # turned it off; this test models the CLUSTER profile, so it
+        # opts in explicitly
         spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         spark.conf.set(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
@@ -608,6 +609,71 @@ def test_runtime_bloom_filter_prunes_fact_scan_at_scale(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", old_bloom)
+        spark.conf.unset(
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+        )
+
+
+def _bloom_builds_over_cache(plan: str) -> int:
+    """Runtime bloom-filter build subqueries in an ``explain('formatted')``
+    string whose build side reads a cached relation."""
+    _, _, subqueries = plan.partition("===== Subqueries =====")
+    return sum(
+        "bloom_filter_agg" in block
+        and ("InMemoryTableScan" in block or "InMemoryRelation" in block)
+        for block in re.split(r"\n(?=Subquery:)", subqueries)
+    )
+
+
+@pytest.mark.parametrize("bloom", ["true", "false"])
+def test_no_runtime_bloom_build_over_cached_relation(spark, sf_dir, bloom):
+    """Runtime bloom injection is left at Spark's default (ON). It must
+    not build a bloom filter over a cached relation in the streaming
+    dedup replay or in pagerank, the two plans where r14 saw it misfire
+    (the replay then carried ~80 such builds). Checked with injection
+    on and off, over the returned plan AND every SQL execution the query
+    runs (pagerank executes its rounds while building). A cached,
+    filtered build side at a zero scan threshold is the control: it
+    shows the check sees such a build whenever injection is on."""
+    from data_engineering_spark.catalog import load_table
+
+    key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict[int, str]:
+        lst = store.executionsList()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in (lst.apply(i) for i in range(lst.size()))
+        }
+
+    old = spark.conf.get(key)
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set(key, bloom)
+    try:
+        for name in ("st_streaming_dedup", "graph_pagerank_events"):
+            seen = set(executions())
+            df = QUERIES[name](spark, sf_dir)
+            plans = [formatted_plan(df)]
+            df.collect()
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            plans += [p for i, p in executions().items() if i not in seen]
+            assert len(plans) > 1, name
+            assert sum(map(_bloom_builds_over_cache, plans)) == 0, name
+
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set(
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
+        )
+        li = load_table(spark, sf_dir, "lineitem")
+        o = load_table(spark, sf_dir, "orders").cache()
+        urgent = o.filter(F.col("o_orderpriority") == "1-URGENT")
+        control = formatted_plan(li.join(urgent, li.l_orderkey == urgent.o_orderkey))
+        o.unpersist()
+        assert (_bloom_builds_over_cache(control) > 0) == (bloom == "true")
+    finally:
+        spark.conf.set(key, old)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.conf.unset(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         )
